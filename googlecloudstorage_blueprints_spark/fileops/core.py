@@ -181,12 +181,7 @@ class FsClient:
         if parent is not None and not other.fs.exists(parent):
             other.fs.mkdirs(parent)
         if same_fs:
-            if other.fs.exists(dst):
-                other.fs.delete(dst, False)  # overwrite-by-default §2.A.5
-            if not self.fs.rename(src, dst):
-                raise FileNotFoundBlueprintError(
-                    f"rename failed: {src_rel} -> {dst_rel}"
-                )
+            self._rename_over(src, dst, f"{src_rel} -> {dst_rel}")
             return
         util = self.spark._jvm.org.apache.hadoop.fs.FileUtil
         util.copy(self.fs, src, other.fs, dst, False, True, self._conf)
@@ -197,6 +192,29 @@ class FsClient:
             raise FileNotFoundBlueprintError(
                 f"source delete failed after copy: {src_rel}"
             )
+
+    def _rename_over(self, src, dst, label: str) -> None:
+        """Rename src onto dst, replacing an existing dst (overwrite by
+        default, §2.A.5) without ever deleting it before src is in place.
+
+        POSIX-style filesystems replace dst in the rename itself.  Ones
+        that refuse to rename onto an existing file (HDFS, GCS) get dst
+        set aside under a hidden sibling name first; a failed rename puts
+        it back, and it is deleted only once src sits at dst."""
+        if self.fs.rename(src, dst):
+            return
+        if not self.fs.exists(dst):
+            raise FileNotFoundBlueprintError(f"rename failed: {label}")
+        aside = self._jpath(dst.getParent(), f".{dst.getName()}.replaced")
+        if not self.fs.rename(dst, aside):
+            raise FileNotFoundBlueprintError(f"rename failed: {label}")
+        if not self.fs.rename(src, dst):
+            restored = self.fs.rename(aside, dst)
+            raise FileNotFoundBlueprintError(
+                f"rename failed: {label}"
+                + ("" if restored else f"; previous copy kept at {aside}")
+            )
+        self.fs.delete(aside, False)
 
 
 # ---------------------------------------------------------------------------

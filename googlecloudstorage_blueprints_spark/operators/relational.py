@@ -83,7 +83,9 @@ def scan_project_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l_returnflag, l_linestatus,
            SUM(l_quantity)                       AS sum_qty,
            ROUND(SUM(l_extendedprice), 2)        AS sum_base_price,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price,
+           CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount)
+                               * 10000) AS BIGINT)) AS BIGINT)
+               / 10000.0                         AS sum_disc_price,
            CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount)
                                * (1 + l_tax) * 1000000) AS BIGINT)) AS BIGINT)
                / 1000000.0                       AS sum_charge,
@@ -105,15 +107,16 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg_qty is expressed as exact integer-sum / count (bit-identical across
     engines); price aggregates are rounded (summation-order drift).
 
-    Parity (r9): sum_disc_price rounds 4dp — the products carry exactly
-    4 decimals so the true total sits on a rounding TARGET, never a
-    boundary (r6 rule; the old 2dp could hit half-cent ties).  sum_charge
-    is a 6-decimal product whose sum magnitude (~1e9 at sf0.1) exceeds
-    double's 1e-6 granularity, so it uses the r7 fixed-point rule: each
-    term is scaled ×1e6 and rounded to BIGINT at birth (per-term float
-    error ~1e-5 ≪ 0.5, so the integer is exact), the order-independent
-    integer sum is divided once at the end — bit-identical across engines
-    and across runs.
+    Parity: sum_disc_price and sum_charge both use the r7 fixed-point
+    rule.  Each term is scaled (×1e4 for the 4-decimal discount product,
+    ×1e6 for the 6-decimal charge) and rounded to BIGINT at birth
+    (per-term float error ≪ 0.5, so the integer is exact); the
+    order-independent integer sum is divided once at the end —
+    bit-identical across engines and across runs.  A 4dp ROUND of a
+    double SUM is not enough near 4e9: double's granularity there is
+    ~5e-7, so a few hundred additions drift past the 5e-5 rounding
+    boundary (a generated lineitem summed to 4186958072.0952 exactly,
+    DuckDB's double sum to …2.0952497, which rounds to …2.0953).
     """
     li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -124,7 +127,9 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum("l_quantity").alias("sum_qty"),
             F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 4).alias("sum_disc_price"),
+            (
+                F.sum(F.round(disc_price * 10_000).cast("long")) / 10_000.0
+            ).alias("sum_disc_price"),
             (
                 F.sum(F.round(charge * 1_000_000).cast("long")) / 1_000_000.0
             ).alias("sum_charge"),

@@ -16,6 +16,20 @@ Scale posture (100 TB / 1000-executor design, tested on local[*]):
   reference's ``--service-account`` handling (``download_file.py:44-62``:
   inline JSON is written to a tempfile first).  Locally we run ``file:/``
   through the identical FileSystem code path.
+- Python-worker daemon (local masters only): ``spark.python.daemon.module``
+  points at :mod:`googlecloudstorage_blueprints_spark._pydaemon`, which runs
+  the stock ``pyspark.daemon`` behind a stat guard on
+  ``zipimporter.invalidate_caches``.  Every Python task calls
+  ``importlib.invalidate_caches()``, and on CPython 3.11 that re-read
+  pyspark.zip's central directory once per cached zipimporter (14–18 of
+  them): 130–220 ms a call, 0.2 ms with the guard.  On a 4-vCPU VM the
+  stateful twins' tasks spent a median ~1 s each initialising Python
+  workers (0.28 s with the guard), and the ``write_path`` benchmark's
+  stream micro-batch p50 fell from 2.63 s to 1.57 s (10 paired runs).
+  The package's parent directory goes on the workers' ``PYTHONPATH`` so
+  the daemon (and any UDF importing engine modules) resolves from every
+  working directory.  Cluster masters and sessions built outside
+  :func:`get_spark` keep Spark's own daemon.
 """
 
 from __future__ import annotations
@@ -28,6 +42,14 @@ import tempfile
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "apply_runtime_conf", "resolve_service_account"]
+
+# Python-worker daemon entry for local sessions (not imported here: the
+# daemon runs it with ``python -m``), and the directory holding this
+# package, for the workers' PYTHONPATH
+_DAEMON_MODULE = "googlecloudstorage_blueprints_spark._pydaemon"
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
 
 # Runtime-settable SQL confs every engine entry point applies, so the engine
 # behaves the same whether the session was built here or handed to us by an
@@ -112,11 +134,15 @@ def get_spark(
     and on a real cluster should be left unset so AQE + defaults govern.
     """
     key_path = resolve_service_account(service_account)
+    cluster_env = bool(
+        os.environ.get("SPARK_MASTER") or os.environ.get("MASTER")
+    )
+    local = master.startswith("local") if master else not cluster_env
 
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER") and not os.environ.get("MASTER"):
+    elif not cluster_env:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         builder = builder.master(f"local[{cpus}]")
 
@@ -125,12 +151,7 @@ def get_spark(
     # driver's core count means nothing and the AQE-governed default must
     # stand (a local-derived 2×cores here would collapse cluster shuffles
     # to a handful of partitions)
-    cluster_env = bool(
-        os.environ.get("SPARK_MASTER") or os.environ.get("MASTER")
-    )
-    if shuffle_partitions is None and not (
-        cluster_env and master is None
-    ) and (master is None or master.startswith("local")):
+    if shuffle_partitions is None and local:
         cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
         if cpus_env and cpus_env.isdigit():
             shuffle_partitions = int(cpus_env) * 2
@@ -148,6 +169,12 @@ def get_spark(
         builder = builder.config(
             "spark.sql.shuffle.partitions", str(shuffle_partitions)
         )
+
+    if local:
+        # workers fork from the engine's daemon entry (module docstring)
+        builder = builder.config(
+            "spark.python.daemon.module", _DAEMON_MODULE
+        ).config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
 
     builder = builder.config("spark.ui.enabled", "false")
     builder = builder.config("spark.driver.memory",

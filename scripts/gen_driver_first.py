@@ -44,27 +44,14 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # Keys whose semantics/plan changed this round: force re-adjudication even
 # though an older CORRECTNESS entry exists.  Rotate this list each round.
 CHANGED_THIS_ROUND: list[str] = [
-    # r19: the thirteen r18 entries (spine replans, unicode fixes,
-    # local_rows_frame replans, pagerank/dedup_clusters loop replans)
-    # all re-adjudicated green in CORRECTNESS_r18 (39/39 oracle pass,
-    # rows-only keys rows/schema-checked) — cleared per the standing
-    # rotation rule.
+    # table_profile (r19 fixture-gate repartition) re-adjudicated green
+    # in CORRECTNESS_r19 — cleared per the standing rotation rule.
     #
-    # r19: table_profile gained the r17 conditional fixture-gate
-    # repartition before its 5-way COUNT DISTINCT Expand (plan change
-    # on one-row-group input only; values identical — parity
-    # re-verified at sf0.01 AND sf0.1, multi-split plan pin in
-    # tests/test_new_ops_r19.py; measured med 2.14 -> 1.64 s warm).
-    "table_profile",
-    #
-    # NOT fronted: the zero-row early-return local_rows_frame
-    # conversions (nine ops) — the early-return path cannot fire on
-    # the non-empty driver fixtures, so the registered plans are
-    # byte-identical (verified via plans/r19 dumps for the digest
-    # family and the empty-catalog audit for the values); pagerank's
-    # above-gate partition sizing only touches the forced-large test
-    # branch (fixture graph sits below the gate; registered plan
-    # unchanged).
+    # pricing_summary: sum_disc_price moved from ROUND(SUM(double), 4)
+    # to the r7 BIGINT fixed-point sum in both the op and its oracle
+    # (a 4dp round of a double sum near 4e9 drifted past the rounding
+    # boundary; pinned in tests/test_boundary_sum_parity.py).
+    "pricing_summary",
 ]
 
 GENERATED_HEADER = '''"""Driver adjudication order — GENERATED, do not edit.

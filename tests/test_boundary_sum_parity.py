@@ -13,6 +13,10 @@ old boundaries and pins:
 - the 4dp outputs equal the exact rational totals (rounding TARGETS,
   no decision boundary left), and
 - the full driver-style canonical compare matches across engines.
+
+A second planted group sums to an exact 4dp total near 4e9, where a
+4dp ROUND of a double SUM drifts; ``sum_disc_price`` therefore uses the
+BIGINT fixed-point sum too.
 """
 
 from __future__ import annotations
@@ -46,22 +50,32 @@ _ROWS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def boundary_dir(tmp_path_factory):
-    out = tmp_path_factory.mktemp("boundary_sf")
-    n = len(_ROWS)
+# Near 4e9 double's granularity is ~4.8e-7, so a 4dp ROUND of a double
+# SUM is no longer safe: one large term, the 2.16 * 0.97 = 2.0952 term
+# and a thousand 0.10 terms sum exactly to 4186958072.0952, but each
+# 0.10 addition rounds down ~9.5e-8 and the double sum reads …2.0951047
+# in both engines.  Only the ×1e4 BIGINT fixed-point sum lands on .0952.
+_NEAR_4E9_ROWS = (
+    [(1.0, 4186957970.00, 0.00, 0.00, "R", "F"),
+     (1.0, 2.16, 0.03, 0.00, "R", "F")]
+    + [(1.0, 0.10, 0.00, 0.00, "R", "F")] * 1000
+)
+
+
+def _write_lineitem(out, rows):
+    n = len(rows)
     tbl = pa.table(
         {
             "l_orderkey": pa.array(range(1, n + 1), pa.int64()),
             "l_partkey": pa.array([1] * n, pa.int64()),
             "l_suppkey": pa.array([1] * n, pa.int64()),
             "l_linenumber": pa.array([1] * n, pa.int32()),
-            "l_quantity": pa.array([r[0] for r in _ROWS], pa.float64()),
-            "l_extendedprice": pa.array([r[1] for r in _ROWS], pa.float64()),
-            "l_discount": pa.array([r[2] for r in _ROWS], pa.float64()),
-            "l_tax": pa.array([r[3] for r in _ROWS], pa.float64()),
-            "l_returnflag": pa.array([r[4] for r in _ROWS], pa.string()),
-            "l_linestatus": pa.array([r[5] for r in _ROWS], pa.string()),
+            "l_quantity": pa.array([r[0] for r in rows], pa.float64()),
+            "l_extendedprice": pa.array([r[1] for r in rows], pa.float64()),
+            "l_discount": pa.array([r[2] for r in rows], pa.float64()),
+            "l_tax": pa.array([r[3] for r in rows], pa.float64()),
+            "l_returnflag": pa.array([r[4] for r in rows], pa.string()),
+            "l_linestatus": pa.array([r[5] for r in rows], pa.string()),
             "l_shipdate": pa.array([_SHIP] * n, pa.timestamp("us")),
         }
     )
@@ -69,31 +83,64 @@ def boundary_dir(tmp_path_factory):
     return str(out)
 
 
-def test_pricing_summary_on_boundary_sums(spark, boundary_dir):
-    from tests.test_oracle_parity import _canon_rows
+@pytest.fixture(scope="module")
+def boundary_dir(tmp_path_factory):
+    return _write_lineitem(tmp_path_factory.mktemp("boundary_sf"), _ROWS)
 
-    sdf = all_queries()["pricing_summary"](spark, boundary_dir)
+
+@pytest.fixture(scope="module")
+def near_4e9_dir(tmp_path_factory):
+    return _write_lineitem(
+        tmp_path_factory.mktemp("near_4e9_sf"), _NEAR_4E9_ROWS
+    )
+
+
+def _pricing_summary_both_engines(spark, sf_dir):
+    """(spark columns, spark rows, duckdb columns, duckdb rows)."""
+    sdf = all_queries()["pricing_summary"](spark, sf_dir)
     spark_rows = [tuple(r) for r in sdf.collect()]
-    by_group = {(r[0], r[1]): r for r in spark_rows}
-
-    # exact rational totals — 4dp targets, not boundaries
-    bf = by_group[("B", "F")]
-    assert bf[sdf.columns.index("sum_disc_price")] == 101.005
-    assert bf[sdf.columns.index("sum_charge")] == 101.1055
-
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW lineitem AS SELECT * FROM "
-        f"read_parquet('{boundary_dir}/lineitem.parquet')"
+        f"read_parquet('{sf_dir}/lineitem.parquet')"
     )
     res = con.execute(all_oracles()["pricing_summary"])
     duck_colnames = [d[0] for d in res.description]
     duck_rows = res.fetchall()
     con.close()
+    return sdf.columns, spark_rows, duck_colnames, duck_rows
 
-    assert _canon_rows(sdf.columns, spark_rows) == _canon_rows(
-        duck_colnames, duck_rows
+
+def test_pricing_summary_on_boundary_sums(spark, boundary_dir):
+    from tests.test_oracle_parity import _canon_rows
+
+    cols, spark_rows, duck_cols, duck_rows = _pricing_summary_both_engines(
+        spark, boundary_dir
+    )
+    by_group = {(r[0], r[1]): r for r in spark_rows}
+
+    # exact rational totals — 4dp targets, not boundaries
+    bf = by_group[("B", "F")]
+    assert bf[cols.index("sum_disc_price")] == 101.005
+    assert bf[cols.index("sum_charge")] == 101.1055
+
+    assert _canon_rows(cols, spark_rows) == _canon_rows(
+        duck_cols, duck_rows
     ), "cross-engine divergence on a planted boundary sum"
+
+
+def test_pricing_summary_exact_disc_price_near_4e9(spark, near_4e9_dir):
+    from tests.test_oracle_parity import _canon_rows
+
+    cols, spark_rows, duck_cols, duck_rows = _pricing_summary_both_engines(
+        spark, near_4e9_dir
+    )
+    (spark_row,), (duck_row,) = spark_rows, duck_rows
+    assert spark_row[cols.index("sum_disc_price")] == 4186958072.0952
+    assert duck_row[duck_cols.index("sum_disc_price")] == 4186958072.0952
+    assert _canon_rows(cols, spark_rows) == _canon_rows(
+        duck_cols, duck_rows
+    )
 
 
 def test_revenue_ops_are_4dp_not_2dp():

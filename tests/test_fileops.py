@@ -176,6 +176,85 @@ def test_move_multi_regex_enumerates_from_1(spark, tree, tmp_path):
     assert out == ["m_1.csv", "m_2.csv"]
 
 
+class _RenameFaultFs:
+    """Hadoop FileSystem proxy whose ``rename`` returns false (the Hadoop
+    failure signal) whenever ``refuse(fs, src, dst)`` says so."""
+
+    def __init__(self, fs, refuse):
+        self._fs = fs
+        self._refuse = refuse
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+    def rename(self, src, dst):
+        if self._refuse(self._fs, src.toString(), dst.toString()):
+            return False
+        return self._fs.rename(src, dst)
+
+
+def _rename_fault_client(refuse):
+    class _RenameFaultClient(FsClient):
+        def __init__(self, spark, root_uri):
+            super().__init__(spark, root_uri)
+            self.fs = _RenameFaultFs(self.fs, refuse)
+
+    return _RenameFaultClient
+
+
+def _move_over_existing(spark, tree, dest):
+    (dest / "a.tar.gz").write_text("old")
+    return move_files(
+        spark, _uri(tree), _uri(dest),
+        source_folder_name="data", source_file_name="a.tar.gz",
+    )
+
+
+@pytest.mark.parametrize(
+    "refuse",
+    [
+        lambda fs, src, dst: src.endswith("/data/a.tar.gz"),  # src only
+        lambda fs, src, dst: True,  # every rename
+    ],
+    ids=["source-rename", "all-renames"],
+)
+def test_move_failed_rename_keeps_destination(
+    spark, tree, tmp_path, monkeypatch, refuse
+):
+    from googlecloudstorage_blueprints_spark.fileops import core
+
+    dest = tmp_path / "dest_bucket"
+    dest.mkdir()
+    monkeypatch.setattr(core, "FsClient", _rename_fault_client(refuse))
+    with pytest.raises(FileNotFoundBlueprintError) as exc:
+        _move_over_existing(spark, tree, dest)
+    assert exc.value.exit_code == 205
+    assert (dest / "a.tar.gz").read_text() == "old"  # destination survives
+    assert (tree / "data" / "a.tar.gz").read_text() == "a2"  # and source
+    assert sorted(p.name for p in dest.iterdir()) == ["a.tar.gz"]
+
+
+def test_move_overwrites_on_no_overwrite_rename(
+    spark, tree, tmp_path, monkeypatch
+):
+    """HDFS/GCS-style rename refuses an existing destination: the old
+    copy is set aside, replaced, and only then deleted."""
+    from googlecloudstorage_blueprints_spark.fileops import core
+
+    dest = tmp_path / "dest_bucket"
+    dest.mkdir()
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+
+    def refuse(fs, src, dst):
+        return bool(fs.exists(jpath(dst)))
+
+    monkeypatch.setattr(core, "FsClient", _rename_fault_client(refuse))
+    assert _move_over_existing(spark, tree, dest) == ["a.tar.gz"]
+    assert (dest / "a.tar.gz").read_text() == "a2"
+    assert not (tree / "data" / "a.tar.gz").exists()
+    assert sorted(p.name for p in dest.iterdir()) == ["a.tar.gz"]
+
+
 def test_remove_regex(spark, tree):
     removed = remove_files(
         spark, _uri(tree),
