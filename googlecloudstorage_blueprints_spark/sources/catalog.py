@@ -29,7 +29,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["TABLES", "load_table", "register_views"]
+__all__ = ["TABLES", "load_table", "normalize_timestamps", "register_views"]
 
 # Plan cache: (applicationId, sf_dir, table) -> analyzed DataFrame.  A
 # DataFrame is an immutable logical plan, so handing the same object to
@@ -68,22 +68,16 @@ _TIMESTAMP_COLS = {
 }
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table as a DataFrame (plan cached per session)."""
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, name)
-    cached = _PLAN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for stale in [k for k in _PLAN_CACHE if k[0] != app]:
-        del _PLAN_CACHE[stale]
-    path = f"{sf_dir}/{name}.parquet"
-    ts_cols = _TIMESTAMP_COLS.get(name, ())
-    if ts_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+def normalize_timestamps(df: DataFrame, table: str) -> DataFrame:
+    """Apply the catalog's timestamp rule to a batch OR streaming read of
+    ``table``: any ``_TIMESTAMP_COLS[table]`` column that arrived as int64
+    nanos becomes a µs TIMESTAMP, then every ``timestamp_ntz`` column is
+    cast to TIMESTAMP.  The caller sets
+    ``spark.sql.legacy.parquet.nanosAsLong`` before the read (a NANOS
+    column is unreadable without it).  This is the ONE place the rule
+    lives — every new source, batch or stream, goes through it."""
     dtypes = dict(df.dtypes)
-    for c in ts_cols:
+    for c in _TIMESTAMP_COLS.get(table, ()):
         if dtypes.get(c) == "bigint":
             # int64 nanos → µs timestamp, truncating like DuckDB's reader
             df = df.withColumn(
@@ -96,10 +90,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # (session.RUNTIME_CONF), so the cast relabels the stored microseconds
     # without shifting them — bit-identical to DuckDB's naive read, and it
     # keeps timestamp-only builtins (unix_micros, window(), to_utc_timestamp)
-    # working no matter which vintage generated the files.
+    # and streaming watermarks working no matter which vintage generated
+    # the files.
     ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
     for c in ntz_cols:
         df = df.withColumn(c, F.col(c).cast("timestamp"))
+    return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one fixture table as a DataFrame (plan cached per session)."""
+    app = spark.sparkContext.applicationId
+    key = (app, sf_dir, name)
+    cached = _PLAN_CACHE.get(key)
+    if cached is not None:
+        return cached
+    for stale in [k for k in _PLAN_CACHE if k[0] != app]:
+        del _PLAN_CACHE[stale]
+    path = f"{sf_dir}/{name}.parquet"
+    if name in _TIMESTAMP_COLS:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = normalize_timestamps(spark.read.parquet(path), name)
     _PLAN_CACHE[key] = df
     return df
 

@@ -25,38 +25,41 @@ WATERMARK = "10 minutes"
 SESSION_GAP = "30 minutes"
 
 
-def read_events_stream(
+def read_table_stream(
     spark: SparkSession,
     sf_dir: str,
-    glob: str = "events.parquet",
+    table: str,
+    glob: str | None = None,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Events as a file-source stream with the same ns→µs conversion as
-    the batch catalog loader.  ``max_files_per_trigger=1`` over a
-    multi-file directory replays history as MULTIPLE micro-batches — how
-    tests exercise cross-batch state (open sessions, timeouts) instead of
-    collapsing the backlog into one batch."""
+    """One catalog table as a file-source stream — events (the activity
+    feed), orders (the order-intake feed), lineitem (the shipments feed)
+    or documents (the corpus-ingest feed) — under the SAME timestamp rule
+    as the batch loader (``catalog.normalize_timestamps``: int64 nanos →
+    µs, timestamp_ntz → TIMESTAMP).  Fixtures regenerate between rounds
+    and have switched physical timestamp types before (the round-5 rule),
+    and watermarks and ``window()`` require TIMESTAMP, not TIMESTAMP_NTZ.
+    ``glob`` defaults to ``<table>.parquet``.
+
+    ``max_files_per_trigger=1`` over a multi-file directory replays
+    history as MULTIPLE micro-batches — how tests exercise cross-batch
+    state (open sessions, timeouts) instead of collapsing the backlog
+    into one batch."""
+    from googlecloudstorage_blueprints_spark.sources.catalog import (
+        normalize_timestamps,
+    )
+
+    glob = glob if glob is not None else f"{table}.parquet"
     apply_runtime_conf(spark)
     static = spark.read.option("pathGlobFilter", glob).parquet(sf_dir)
     # the fixture directory holds all tables; pathGlobFilter scopes the
-    # stream to the events file(s) only
+    # stream to this table's file(s) only
     reader = spark.readStream.schema(static.schema).option(
         "pathGlobFilter", glob
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(sf_dir)
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    elif ts_type == "timestamp_ntz":
-        # newer fixtures store TIMESTAMP(MICROS, ntz); session tz is pinned
-        # UTC so the cast relabels micros without shifting (watermarks and
-        # window() require TIMESTAMP, not TIMESTAMP_NTZ)
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return normalize_timestamps(reader.parquet(sf_dir), table)
 
 
 def streaming_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -64,7 +67,7 @@ def streaming_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of ``events_tumbling_agg``.  In append mode a window emits once
     its watermark passes; counts match the batch form for the replayed
     fixture because the backlog is finite."""
-    events = read_events_stream(spark, sf_dir)
+    events = read_table_stream(spark, sf_dir, "events")
     return (
         events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("win"))
@@ -83,7 +86,7 @@ def streaming_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (30-min gap) per user via ``session_window`` — the
     streaming twin of ``events_sessionize``/``events_session_stats``."""
-    events = read_events_stream(spark, sf_dir)
+    events = read_table_stream(spark, sf_dir, "events")
     return (
         events.withWatermark("ts", WATERMARK)
         .groupBy(
@@ -128,7 +131,7 @@ def streaming_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a broadcast of the pre-aggregated dimension keeps the stream side
     shuffle-free.  This is the canonical enrichment topology: facts
     stream, dimensions are tables."""
-    events = read_events_stream(spark, sf_dir)
+    events = read_table_stream(spark, sf_dir, "events")
     user_orders = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
         .groupBy(F.col("o_custkey").alias("user_id"))
@@ -181,7 +184,7 @@ def streaming_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     state store, so the op scales with stream throughput alone.  The
     6dp-rounded z-score threshold mirrors the batch op's cross-engine
     parity rule."""
-    events = read_events_stream(spark, sf_dir)
+    events = read_table_stream(spark, sf_dir, "events")
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
 
     history = load_table(spark, sf_dir, "events")
@@ -212,13 +215,7 @@ def streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     here they run once per DOCUMENT on a bounded token array, not in a
     corpus-wide hot loop — the explode/groupBy form used by the batch
     funnel is not available under streaming without state.)"""
-    apply_runtime_conf(spark)
-    static = spark.read.option(
-        "pathGlobFilter", "documents.parquet"
-    ).parquet(sf_dir)
-    stream = spark.readStream.schema(static.schema).option(
-        "pathGlobFilter", "documents.parquet"
-    ).parquet(sf_dir)
+    stream = read_table_stream(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n_tokens = F.size(toks)
     # top-token share via in-row frequency: for each distinct token,
@@ -268,7 +265,7 @@ def streaming_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
 
-    apply_runtime_conf(spark)
+    stream = read_table_stream(spark, sf_dir, "documents")
     docs_static = load_table(spark, sf_dir, "documents")
     # the static side of a stream-static join re-plans per micro-batch:
     # persist the (small, ~1%-of-corpus distinct-shingle) index so each
@@ -286,9 +283,6 @@ def streaming_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .persist()
     )
-    stream = spark.readStream.schema(docs_static.schema).option(
-        "pathGlobFilter", "documents.parquet"
-    ).parquet(sf_dir)
     hits = (
         stream.where(
             F.col("text").isNotNull()
@@ -310,7 +304,7 @@ def streaming_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window twin of ``events_sliding_agg``: 1-hour windows every
     30 minutes under a watermark — each event feeds two window states."""
-    events = read_events_stream(spark, sf_dir)
+    events = read_table_stream(spark, sf_dir, "events")
     return (
         events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("win"))
@@ -326,85 +320,6 @@ def streaming_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-
-
-def read_lineitem_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "lineitem.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Lineitem as a file-source stream (the shipments feed) with the
-    same timestamp_ntz → TIMESTAMP normalization the batch catalog
-    applies to ``l_shipdate`` (fixtures regenerate between rounds and
-    have switched physical timestamp types before — round-5 rule)."""
-    apply_runtime_conf(spark)
-    static = spark.read.option("pathGlobFilter", glob).parquet(sf_dir)
-    reader = spark.readStream.schema(static.schema).option(
-        "pathGlobFilter", glob
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(sf_dir)
-    ship_type = dict(stream.dtypes).get("l_shipdate")
-    if ship_type == "bigint":
-        stream = stream.withColumn(
-            "l_shipdate", F.timestamp_micros(F.expr("l_shipdate div 1000"))
-        )
-    elif ship_type == "timestamp_ntz":
-        stream = stream.withColumn(
-            "l_shipdate", F.col("l_shipdate").cast("timestamp")
-        )
-    return stream
-
-
-def read_orders_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "orders.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Orders as a file-source stream (the order-intake feed) with the
-    same timestamp_ntz → TIMESTAMP normalization the batch catalog
-    applies to ``o_orderdate`` (the round-5 rule — fixtures regenerate
-    between rounds and have switched physical timestamp types)."""
-    apply_runtime_conf(spark)
-    static = spark.read.option("pathGlobFilter", glob).parquet(sf_dir)
-    reader = spark.readStream.schema(static.schema).option(
-        "pathGlobFilter", glob
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(sf_dir)
-    od_type = dict(stream.dtypes).get("o_orderdate")
-    if od_type == "bigint":
-        stream = stream.withColumn(
-            "o_orderdate", F.timestamp_micros(F.expr("o_orderdate div 1000"))
-        )
-    elif od_type == "timestamp_ntz":
-        stream = stream.withColumn(
-            "o_orderdate", F.col("o_orderdate").cast("timestamp")
-        )
-    return stream
-
-
-def read_documents_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "documents.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Documents as a file-source stream (the corpus-ingest feed) — no
-    timestamp column, so no ntz normalization is needed; the glob /
-    maxFilesPerTrigger knobs match the other readers."""
-    apply_runtime_conf(spark)
-    static = spark.read.option("pathGlobFilter", glob).parquet(sf_dir)
-    reader = spark.readStream.schema(static.schema).option(
-        "pathGlobFilter", glob
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -490,15 +405,17 @@ def _ship_latency_joined(
 ) -> DataFrame:
     """The raw watermarked order⋈shipment interval join (event-time
     columns retained for downstream stateful chaining)."""
-    o = read_orders_stream(
+    o = read_table_stream(
         spark,
         orders_dir or sf_dir,
+        "orders",
         glob=orders_glob,
         max_files_per_trigger=max_files_per_trigger,
     ).select("o_orderkey", "o_orderdate")
-    li = read_lineitem_stream(
+    li = read_table_stream(
         spark,
         lineitem_dir or sf_dir,
+        "lineitem",
         glob=lineitem_glob,
         max_files_per_trigger=max_files_per_trigger,
     ).select("l_orderkey", "l_linenumber", "l_shipdate")

@@ -21,42 +21,42 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from googlecloudstorage_blueprints_spark.streaming.events_stream import (
     WATERMARK,
-    read_events_stream,
+    read_table_stream,
 )
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min, µs — matches SESSION_GAP
 
-_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("start_us", LongType()),
-        StructField("end_us", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-    ]
+
+def _keyed_state(
+    stream: DataFrame,
+    keys: list[str],
+    kernel,
+    out: str,
+    state: str,
+    timeout: str = GroupStateTimeout.NoTimeout,
+    event_time: str | None = "ts",
+) -> DataFrame:
+    """The one keyed-state pipeline every twin runs: watermark on
+    ``event_time`` (None for the twins that run without one: no
+    event-time timeout and no late-row drop), group by ``keys``, then
+    ``applyInPandasWithState`` in append mode with DDL output/state
+    schemas."""
+    if event_time is not None:
+        stream = stream.withWatermark(event_time, WATERMARK)
+    return stream.groupBy(*keys).applyInPandasWithState(
+        kernel, out, state, "append", timeout
+    )
+
+
+_OUTPUT_SCHEMA = (
+    "user_id long, start_us long, end_us long, n_events long, "
+    "total_value double"
 )
 
-_STATE_SCHEMA = StructType(
-    [
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("n", LongType()),
-        StructField("total", DoubleType()),
-    ]
-)
+_STATE_SCHEMA = "start_us long, last_us long, n long, total double"
 
 
 def _sessionize(key: tuple, pdfs, state: GroupState):
@@ -132,26 +132,23 @@ def streaming_stateful_sessions(
     """Explicit keyed-state sessionization via ``applyInPandasWithState`` —
     the custom-operator path when ``session_window`` semantics don't fit.
     One shuffle on user_id; state store holds one tuple per live user."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize,
-            _OUTPUT_SCHEMA,
-            _STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_state(
+        events,
+        ["user_id"],
+        _sessionize,
+        _OUTPUT_SCHEMA,
+        _STATE_SCHEMA,
+        GroupStateTimeout.EventTimeTimeout,
     )
 
 
 def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """At-least-once ingestion → exactly-once rows: keep the first sighting
     of each event_id, expire dedup state with the watermark."""
-    events = read_events_stream(spark, sf_dir)
+    events = read_table_stream(spark, sf_dir, "events")
     return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
@@ -161,17 +158,9 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # streaming near-dup candidates: LSH band buckets as keyed state
 # ---------------------------------------------------------------------------
 
-_LSH_OUT_SCHEMA = StructType(
-    [
-        StructField("doc_a", LongType()),
-        StructField("doc_b", LongType()),
-        StructField("band_id", IntegerType()),
-    ]
-)
+_LSH_OUT_SCHEMA = "doc_a long, doc_b long, band_id int"
 
-_LSH_STATE_SCHEMA = StructType(
-    [StructField("doc_ids", ArrayType(LongType()))]
-)
+_LSH_STATE_SCHEMA = "doc_ids array<long>"
 
 
 def _band_bucket_pairs(key: tuple, pdfs, state: GroupState):
@@ -232,26 +221,21 @@ def streaming_lsh_candidates(
         hashed_shingle_docs,
         minhash_signatures_arrow,
     )
-    from googlecloudstorage_blueprints_spark.session import apply_runtime_conf
 
-    apply_runtime_conf(spark)
-    static = spark.read.option("pathGlobFilter", glob).parquet(sf_dir)
-    reader = spark.readStream.schema(static.schema).option(
-        "pathGlobFilter", glob
+    stream = read_table_stream(
+        spark, sf_dir, "documents", glob, max_files_per_trigger
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(sf_dir)
     bands = minhash_signatures_arrow(
         hashed_shingle_docs(stream.where(F.col("text").isNotNull())),
         emit_bands=True,
     )
-    return bands.groupBy("band_id", "band_hash").applyInPandasWithState(
+    return _keyed_state(
+        bands,
+        ["band_id", "band_hash"],
         _band_bucket_pairs,
         _LSH_OUT_SCHEMA,
         _LSH_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
+        event_time=None,
     )
 
 
@@ -259,18 +243,9 @@ def streaming_lsh_candidates(
 # streaming sequence packing: per-source running token offset as state
 # ---------------------------------------------------------------------------
 
-_PACK_OUT_SCHEMA = StructType(
-    [
-        StructField("source", StringType()),
-        StructField("doc_id", LongType()),
-        StructField("n_tokens", LongType()),
-        StructField("bin_id", LongType()),
-    ]
-)
+_PACK_OUT_SCHEMA = "source string, doc_id long, n_tokens long, bin_id long"
 
-_PACK_STATE_SCHEMA = StructType(
-    [StructField("tokens_so_far", LongType())]
-)
+_PACK_STATE_SCHEMA = "tokens_so_far long"
 
 
 def _pack_bins(key: tuple, pdfs, state: GroupState):
@@ -325,27 +300,21 @@ def streaming_sequence_pack(
     the batch operator bit-for-bit when replay order is doc_id order
     (test-pinned); out-of-order arrival packs in arrival order, which is
     the correct online semantics (a packer cannot reorder history)."""
-    from googlecloudstorage_blueprints_spark.session import apply_runtime_conf
-
-    apply_runtime_conf(spark)
-    static = spark.read.option("pathGlobFilter", glob).parquet(sf_dir)
-    reader = spark.readStream.schema(static.schema).option(
-        "pathGlobFilter", glob
+    stream = read_table_stream(
+        spark, sf_dir, "documents", glob, max_files_per_trigger
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(sf_dir)
     toks = stream.where(F.col("text").isNotNull()).select(
         "source",
         "doc_id",
         F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
     )
-    return toks.groupBy("source").applyInPandasWithState(
+    return _keyed_state(
+        toks,
+        ["source"],
         _pack_bins,
         _PACK_OUT_SCHEMA,
         _PACK_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
+        event_time=None,
     )
 
 
@@ -363,21 +332,11 @@ HOUR_US = 3_600 * 1_000_000
 # the replay test sees batch-identical output.
 GAPFILL_EVICT_HORIZON_US = 90 * 24 * HOUR_US
 
-_GAPFILL_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("bucket", StringType()),
-        StructField("observed", BooleanType()),
-        StructField("filled_value", DoubleType()),
-    ]
+_GAPFILL_OUT_SCHEMA = (
+    "user_id long, bucket string, observed boolean, filled_value double"
 )
 
-_GAPFILL_STATE_SCHEMA = StructType(
-    [
-        StructField("last_bucket_us", LongType()),
-        StructField("last_value", DoubleType()),
-    ]
-)
+_GAPFILL_STATE_SCHEMA = "last_bucket_us long, last_value double"
 
 
 def _bucket_str(us: int) -> str:
@@ -495,20 +454,16 @@ def streaming_gapfill(
     the batch operator's output (test-pinned), except a user's leading
     batch NULL-fill rows, which cannot exist here because a streaming
     grid starts at the first observation."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("user_id", "ts", "value")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_gapfill(evict_horizon_us),
-            _GAPFILL_OUT_SCHEMA,
-            _GAPFILL_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_state(
+        events.select("user_id", "ts", "value"),
+        ["user_id"],
+        _make_gapfill(evict_horizon_us),
+        _GAPFILL_OUT_SCHEMA,
+        _GAPFILL_STATE_SCHEMA,
+        GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -516,23 +471,12 @@ def streaming_gapfill(
 # streaming latest-snapshot: CDC compaction as keyed state
 # ---------------------------------------------------------------------------
 
-_SNAPSHOT_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("event_id", LongType()),
-        StructField("ts_us", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-    ]
+_SNAPSHOT_OUT_SCHEMA = (
+    "user_id long, event_id long, ts_us long, event_type string, value double"
 )
 
-_SNAPSHOT_STATE_SCHEMA = StructType(
-    [
-        StructField("ts_us", LongType()),
-        StructField("event_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-    ]
+_SNAPSHOT_STATE_SCHEMA = (
+    "ts_us long, event_id long, event_type string, value double"
 )
 
 
@@ -595,20 +539,15 @@ def streaming_latest_snapshot(
     out-of-order arrival no-ops, so the changelog is replay-idempotent;
     its newest row per key equals the batch operator over any in-order
     replay (test-pinned in tests/test_streaming.py)."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type", "value")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _latest_per_key,
-            _SNAPSHOT_OUT_SCHEMA,
-            _SNAPSHOT_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events.select("user_id", "event_id", "ts", "event_type", "value"),
+        ["user_id"],
+        _latest_per_key,
+        _SNAPSHOT_OUT_SCHEMA,
+        _SNAPSHOT_STATE_SCHEMA,
     )
 
 
@@ -616,20 +555,10 @@ def streaming_latest_snapshot(
 # streaming transition counts: last-event-type keyed state
 # ---------------------------------------------------------------------------
 
-_TRANSITION_OUT_SCHEMA = StructType(
-    [
-        StructField("src", StringType()),
-        StructField("dst", StringType()),
-        StructField("n", LongType()),
-    ]
-)
+_TRANSITION_OUT_SCHEMA = "src string, dst string, n long"
 
-_TRANSITION_STATE_SCHEMA = StructType(
-    [
-        StructField("last_ts_us", LongType()),
-        StructField("last_event_id", LongType()),
-        StructField("last_type", StringType()),
-    ]
+_TRANSITION_STATE_SCHEMA = (
+    "last_ts_us long, last_event_id long, last_type string"
 )
 
 
@@ -684,20 +613,15 @@ def streaming_transition_matrix(
     shuffles once on user_id and emits at most |types|² rows per user —
     the unbounded stream never accumulates more than the last event per
     key."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _transition_counts,
-            _TRANSITION_OUT_SCHEMA,
-            _TRANSITION_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events.select("user_id", "event_id", "ts", "event_type"),
+        ["user_id"],
+        _transition_counts,
+        _TRANSITION_OUT_SCHEMA,
+        _TRANSITION_STATE_SCHEMA,
     )
 
 
@@ -705,17 +629,9 @@ def streaming_transition_matrix(
 # streaming co-occurrence: seen-type-set keyed state
 # ---------------------------------------------------------------------------
 
-_COOC_OUT_SCHEMA = StructType(
-    [
-        StructField("type_a", StringType()),
-        StructField("type_b", StringType()),
-        StructField("n", LongType()),
-    ]
-)
+_COOC_OUT_SCHEMA = "type_a string, type_b string, n long"
 
-_COOC_STATE_SCHEMA = StructType(
-    [StructField("seen_types", ArrayType(StringType()))]
-)
+_COOC_STATE_SCHEMA = "seen_types array<string>"
 
 
 def _cooccurrence_pairs(key: tuple, pdfs, state: GroupState):
@@ -760,20 +676,15 @@ def streaming_cooccurrence(
     including redelivery, since repeats are absorbed by the set
     (test-pinned).  One shuffle on user_id per micro-batch; emission
     volume is bounded by |types|² per user EVER, not per batch."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _cooccurrence_pairs,
-            _COOC_OUT_SCHEMA,
-            _COOC_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events.select("user_id", "event_id", "ts", "event_type"),
+        ["user_id"],
+        _cooccurrence_pairs,
+        _COOC_OUT_SCHEMA,
+        _COOC_STATE_SCHEMA,
     )
 
 
@@ -781,22 +692,12 @@ def streaming_cooccurrence(
 # streaming SCD2 maintenance: open-interval keyed state
 # ---------------------------------------------------------------------------
 
-_SCD2_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("valid_from_us", LongType()),
-        StructField("valid_to_us", LongType()),
-    ]
+_SCD2_OUT_SCHEMA = (
+    "user_id long, event_type string, valid_from_us long, valid_to_us long"
 )
 
-_SCD2_STATE_SCHEMA = StructType(
-    [
-        StructField("last_ts_us", LongType()),
-        StructField("last_event_id", LongType()),
-        StructField("cur_type", StringType()),
-        StructField("cur_from_us", LongType()),
-    ]
+_SCD2_STATE_SCHEMA = (
+    "last_ts_us long, last_event_id long, cur_type string, cur_from_us long"
 )
 
 
@@ -876,20 +777,15 @@ def streaming_scd2_intervals(
     current table, mirroring ``streaming_latest_snapshot``'s changelog
     contract).  (ts_us, event_id)-race absorption makes full-backlog
     redelivery a no-op (test-pinned in tests/test_streaming.py)."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _scd2_intervals,
-            _SCD2_OUT_SCHEMA,
-            _SCD2_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events.select("user_id", "event_id", "ts", "event_type"),
+        ["user_id"],
+        _scd2_intervals,
+        _SCD2_OUT_SCHEMA,
+        _SCD2_STATE_SCHEMA,
     )
 
 
@@ -897,16 +793,9 @@ def streaming_scd2_intervals(
 # streaming user-activity distinct: seen-day-set keyed state (DAU/WAU feed)
 # ---------------------------------------------------------------------------
 
-_ACTIVITY_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("epoch_day", LongType()),
-    ]
-)
+_ACTIVITY_OUT_SCHEMA = "user_id long, epoch_day long"
 
-_ACTIVITY_STATE_SCHEMA = StructType(
-    [StructField("seen_days", ArrayType(LongType()))]
-)
+_ACTIVITY_STATE_SCHEMA = "seen_days array<long>"
 
 # Epoch-bucket keys (day/week/hour) in the kernels use Python floor
 # division (//), while the batch ops use Spark `div` (truncates toward
@@ -962,20 +851,15 @@ def streaming_dau_wau(
     adds nothing); one shuffle on user_id per micro-batch.  Set
     absorption makes full-backlog redelivery a no-op (test-pinned in
     tests/test_streaming.py)."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("user_id", "ts")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _activity_days,
-            _ACTIVITY_OUT_SCHEMA,
-            _ACTIVITY_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events.select("user_id", "ts"),
+        ["user_id"],
+        _activity_days,
+        _ACTIVITY_OUT_SCHEMA,
+        _ACTIVITY_STATE_SCHEMA,
     )
 
 
@@ -983,24 +867,12 @@ def streaming_dau_wau(
 # streaming session path trigrams: rolling two-event session tail state
 # ---------------------------------------------------------------------------
 
-_PATH_OUT_SCHEMA = StructType(
-    [
-        StructField("trigram", StringType()),
-        StructField("n", LongType()),
-    ]
-)
+_PATH_OUT_SCHEMA = "trigram string, n long"
 
 # the current session's last (up to) two events; missing slots use the
 # (-1, -1, "") sentinel — state columns must stay non-null fixed-width
-_PATH_STATE_SCHEMA = StructType(
-    [
-        StructField("ts1_us", LongType()),
-        StructField("id1", LongType()),
-        StructField("t1", StringType()),
-        StructField("ts2_us", LongType()),
-        StructField("id2", LongType()),
-        StructField("t2", StringType()),
-    ]
+_PATH_STATE_SCHEMA = (
+    "ts1_us long, id1 long, t1 string, ts2_us long, id2 long, t2 string"
 )
 
 
@@ -1072,20 +944,15 @@ def streaming_session_path_trigrams(
     shuffles once on user_id.  The batch op needs the whole session
     collected to zip — the stream never holds more than two events per
     key, which is the property that matters on an unbounded stream."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _path_trigram_counts,
-            _PATH_OUT_SCHEMA,
-            _PATH_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events.select("user_id", "event_id", "ts", "event_type"),
+        ["user_id"],
+        _path_trigram_counts,
+        _PATH_OUT_SCHEMA,
+        _PATH_STATE_SCHEMA,
     )
 
 
@@ -1093,22 +960,11 @@ def streaming_session_path_trigrams(
 # streaming funnel conversion delays: first-entry/converted keyed state
 # ---------------------------------------------------------------------------
 
-_FUNNEL_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("delay_s", LongType()),
-    ]
-)
+_FUNNEL_OUT_SCHEMA = "user_id long, delay_s long"
 
 # (first entry-event ts or -1, converted flag as 0/1, newest {to} ts
 # seen BEFORE any entry or -1 — the tied-timestamp bridge)
-_FUNNEL_STATE_SCHEMA = StructType(
-    [
-        StructField("ta_us", LongType()),
-        StructField("converted", IntegerType()),
-        StructField("lastp_us", LongType()),
-    ]
-)
+_FUNNEL_STATE_SCHEMA = "ta_us long, converted int, lastp_us long"
 
 
 def _make_funnel_delays(from_type: str, to_type: str):
@@ -1186,20 +1042,15 @@ def streaming_funnel_delays(
         FUNNEL_TO,
     )
 
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_funnel_delays(FUNNEL_FROM, FUNNEL_TO),
-            _FUNNEL_OUT_SCHEMA,
-            _FUNNEL_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events.select("user_id", "event_id", "ts", "event_type"),
+        ["user_id"],
+        _make_funnel_delays(FUNNEL_FROM, FUNNEL_TO),
+        _FUNNEL_OUT_SCHEMA,
+        _FUNNEL_STATE_SCHEMA,
     )
 
 
@@ -1207,20 +1058,9 @@ def streaming_funnel_delays(
 # streaming first-ship SLA: running-min changelog per order (r9)
 # ---------------------------------------------------------------------------
 
-_FIRSTSHIP_OUT_SCHEMA = StructType(
-    [
-        StructField("l_orderkey", LongType()),
-        StructField("first_ship_us", LongType()),
-        StructField("ship_line", LongType()),
-    ]
-)
+_FIRSTSHIP_OUT_SCHEMA = "l_orderkey long, first_ship_us long, ship_line long"
 
-_FIRSTSHIP_STATE_SCHEMA = StructType(
-    [
-        StructField("best_ship_us", LongType()),
-        StructField("best_line", LongType()),
-    ]
-)
+_FIRSTSHIP_STATE_SCHEMA = "best_ship_us long, best_line long"
 
 
 def _first_ship_per_order(key: tuple, pdfs, state: GroupState):
@@ -1283,24 +1123,17 @@ def streaming_first_ship_sla(
     from googlecloudstorage_blueprints_spark.sources.catalog import (
         load_table,
     )
-    from googlecloudstorage_blueprints_spark.streaming.events_stream import (
-        read_lineitem_stream,
-    )
 
-    li = read_lineitem_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    li = read_table_stream(
+        spark, sf_dir, "lineitem", glob, max_files_per_trigger
     )
-    changelog = (
-        li.select("l_orderkey", "l_linenumber", "l_shipdate")
-        .withWatermark("l_shipdate", WATERMARK)
-        .groupBy("l_orderkey")
-        .applyInPandasWithState(
-            _first_ship_per_order,
-            _FIRSTSHIP_OUT_SCHEMA,
-            _FIRSTSHIP_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    changelog = _keyed_state(
+        li.select("l_orderkey", "l_linenumber", "l_shipdate"),
+        ["l_orderkey"],
+        _first_ship_per_order,
+        _FIRSTSHIP_OUT_SCHEMA,
+        _FIRSTSHIP_STATE_SCHEMA,
+        event_time="l_shipdate",
     )
     orders = load_table(spark, orders_dir or sf_dir, "orders").select(
         F.col("o_orderkey"),
@@ -1326,24 +1159,14 @@ def streaming_first_ship_sla(
 # streaming session entries: gap sessionizer that carries the entry type
 # ---------------------------------------------------------------------------
 
-_ENTRY_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("entry_type", StringType()),
-        StructField("start_us", LongType()),
-        StructField("end_us", LongType()),
-        StructField("n_events", LongType()),
-    ]
+_ENTRY_OUT_SCHEMA = (
+    "user_id long, entry_type string, start_us long, end_us long, "
+    "n_events long"
 )
 
-_ENTRY_STATE_SCHEMA = StructType(
-    [
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("n_events", LongType()),
-        StructField("entry_type", StringType()),
-        StructField("entry_event_id", LongType()),
-    ]
+_ENTRY_STATE_SCHEMA = (
+    "start_us long, last_us long, n_events long, entry_type string, "
+    "entry_event_id long"
 )
 
 
@@ -1431,20 +1254,16 @@ def streaming_session_entries(
     (bounce = n_events == 1).  Same gap rule, timeout closure, and
     (ts, event_id) entry race as the batch windows — pinned batch-equal
     over replay in tests."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_entries,
-            _ENTRY_OUT_SCHEMA,
-            _ENTRY_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_state(
+        events.select("user_id", "event_id", "ts", "event_type"),
+        ["user_id"],
+        _sessionize_entries,
+        _ENTRY_OUT_SCHEMA,
+        _ENTRY_STATE_SCHEMA,
+        GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -1452,23 +1271,12 @@ def streaming_session_entries(
 # streaming session depth + conversion (feed for session_depth_conversion)
 # ---------------------------------------------------------------------------
 
-_DEPTH_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("start_us", LongType()),
-        StructField("end_us", LongType()),
-        StructField("n_events", LongType()),
-        StructField("converted", LongType()),
-    ]
+_DEPTH_OUT_SCHEMA = (
+    "user_id long, start_us long, end_us long, n_events long, converted long"
 )
 
-_DEPTH_STATE_SCHEMA = StructType(
-    [
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("n_events", LongType()),
-        StructField("converted", LongType()),
-    ]
+_DEPTH_STATE_SCHEMA = (
+    "start_us long, last_us long, n_events long, converted long"
 )
 
 
@@ -1549,20 +1357,16 @@ def streaming_session_depth(
     rates downstream are one stateless aggregate of this append
     stream.  Same gap rule and timeout closure as the batch windows —
     pinned batch-equal over replay in tests."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("user_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_depth,
-            _DEPTH_OUT_SCHEMA,
-            _DEPTH_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_state(
+        events.select("user_id", "ts", "event_type"),
+        ["user_id"],
+        _sessionize_depth,
+        _DEPTH_OUT_SCHEMA,
+        _DEPTH_STATE_SCHEMA,
+        GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -1570,21 +1374,12 @@ def streaming_session_depth(
 # streaming first-touch attribution: running-min changelog per user (r11)
 # ---------------------------------------------------------------------------
 
-_FIRSTTOUCH_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("first_ts_us", LongType()),
-        StructField("first_event_id", LongType()),
-        StructField("first_type", StringType()),
-    ]
+_FIRSTTOUCH_OUT_SCHEMA = (
+    "user_id long, first_ts_us long, first_event_id long, first_type string"
 )
 
-_FIRSTTOUCH_STATE_SCHEMA = StructType(
-    [
-        StructField("best_ts_us", LongType()),
-        StructField("best_event_id", LongType()),
-        StructField("best_type", StringType()),
-    ]
+_FIRSTTOUCH_STATE_SCHEMA = (
+    "best_ts_us long, best_event_id long, best_type string"
 )
 
 
@@ -1645,20 +1440,15 @@ def streaming_first_touch(
     user's first touch must survive idle periods — memory is O(|users|),
     the bound the downstream attribution table has anyway); one user_id
     shuffle per micro-batch."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _first_touch_per_user,
-            _FIRSTTOUCH_OUT_SCHEMA,
-            _FIRSTTOUCH_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events.select("user_id", "event_id", "ts", "event_type"),
+        ["user_id"],
+        _first_touch_per_user,
+        _FIRSTTOUCH_OUT_SCHEMA,
+        _FIRSTTOUCH_STATE_SCHEMA,
     )
 
 
@@ -1666,21 +1456,12 @@ def streaming_first_touch(
 # streaming pair latency: hand-off gap partial sums (r11)
 # ---------------------------------------------------------------------------
 
-_PAIR_LATENCY_OUT_SCHEMA = StructType(
-    [
-        StructField("prev_type", StringType()),
-        StructField("next_type", StringType()),
-        StructField("n_pairs", LongType()),
-        StructField("total_gap_us", LongType()),
-    ]
+_PAIR_LATENCY_OUT_SCHEMA = (
+    "prev_type string, next_type string, n_pairs long, total_gap_us long"
 )
 
-_PAIR_LATENCY_STATE_SCHEMA = StructType(
-    [
-        StructField("last_ts_us", LongType()),
-        StructField("last_event_id", LongType()),
-        StructField("last_type", StringType()),
-    ]
+_PAIR_LATENCY_STATE_SCHEMA = (
+    "last_ts_us long, last_event_id long, last_type string"
 )
 
 
@@ -1747,20 +1528,15 @@ def streaming_pair_latency(
     Scale: state is one fixed-width (ts_us, event_id, type) tuple per
     user, no timeout; each micro-batch shuffles once on user_id and
     emits at most |types|² rows per user."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _pair_latency_sums,
-            _PAIR_LATENCY_OUT_SCHEMA,
-            _PAIR_LATENCY_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events.select("user_id", "event_id", "ts", "event_type"),
+        ["user_id"],
+        _pair_latency_sums,
+        _PAIR_LATENCY_OUT_SCHEMA,
+        _PAIR_LATENCY_STATE_SCHEMA,
     )
 
 
@@ -1768,20 +1544,9 @@ def streaming_pair_latency(
 # streaming intersession gaps: return-latency partial sums (r13)
 # ---------------------------------------------------------------------------
 
-_INTERSESSION_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_gaps", LongType()),
-        StructField("total_gap_us", LongType()),
-    ]
-)
+_INTERSESSION_OUT_SCHEMA = "user_id long, n_gaps long, total_gap_us long"
 
-_INTERSESSION_STATE_SCHEMA = StructType(
-    [
-        StructField("last_ts_us", LongType()),
-        StructField("last_event_id", LongType()),
-    ]
-)
+_INTERSESSION_STATE_SCHEMA = "last_ts_us long, last_event_id long"
 
 
 def _intersession_gap_sums(key: tuple, pdfs, state: GroupState):
@@ -1842,20 +1607,15 @@ def streaming_intersession_gaps(
     Scale: state is one fixed-width (ts_us, event_id) tuple per user,
     no timeout; each micro-batch shuffles once on user_id and emits at
     most one partial row per user."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("user_id", "event_id", "ts")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _intersession_gap_sums,
-            _INTERSESSION_OUT_SCHEMA,
-            _INTERSESSION_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events.select("user_id", "event_id", "ts"),
+        ["user_id"],
+        _intersession_gap_sums,
+        _INTERSESSION_OUT_SCHEMA,
+        _INTERSESSION_STATE_SCHEMA,
     )
 
 
@@ -1863,12 +1623,7 @@ def streaming_intersession_gaps(
 # streaming session starts: the session-count changelog (r13)
 # ---------------------------------------------------------------------------
 
-_SESSION_STARTS_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("start_ts_us", LongType()),
-    ]
-)
+_SESSION_STARTS_OUT_SCHEMA = "user_id long, start_ts_us long"
 
 
 def _session_start_marks(key: tuple, pdfs, state: GroupState):
@@ -1920,20 +1675,15 @@ def streaming_session_starts(
 
     Scale: state is one fixed-width (ts_us, event_id) tuple per user,
     no timeout; at most one shuffle per micro-batch on user_id."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("user_id", "event_id", "ts")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _session_start_marks,
-            _SESSION_STARTS_OUT_SCHEMA,
-            _INTERSESSION_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events.select("user_id", "event_id", "ts"),
+        ["user_id"],
+        _session_start_marks,
+        _SESSION_STARTS_OUT_SCHEMA,
+        _INTERSESSION_STATE_SCHEMA,
     )
 
 
@@ -1941,20 +1691,9 @@ def streaming_session_starts(
 # streaming weekly conversion: per-user seen/bought week sets (r12)
 # ---------------------------------------------------------------------------
 
-_WEEKLY_CONV_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("epoch_week", LongType()),
-        StructField("kind", StringType()),
-    ]
-)
+_WEEKLY_CONV_OUT_SCHEMA = "user_id long, epoch_week long, kind string"
 
-_WEEKLY_CONV_STATE_SCHEMA = StructType(
-    [
-        StructField("seen_weeks", ArrayType(LongType())),
-        StructField("bought_weeks", ArrayType(LongType())),
-    ]
-)
+_WEEKLY_CONV_STATE_SCHEMA = "seen_weeks array<long>, bought_weeks array<long>"
 
 _US_PER_WEEK = 7 * 86_400 * 1_000_000
 
@@ -2018,20 +1757,15 @@ def streaming_weekly_conversion(
     Scale: state is two week-sets per user — bounded by |weeks in
     retention|, never event volume; one user_id shuffle per
     micro-batch."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("user_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _weekly_conversion_marks,
-            _WEEKLY_CONV_OUT_SCHEMA,
-            _WEEKLY_CONV_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events.select("user_id", "ts", "event_type"),
+        ["user_id"],
+        _weekly_conversion_marks,
+        _WEEKLY_CONV_OUT_SCHEMA,
+        _WEEKLY_CONV_STATE_SCHEMA,
     )
 
 
@@ -2039,20 +1773,9 @@ def streaming_weekly_conversion(
 # streaming order-close changelog: running-MAX ship per order (r12)
 # ---------------------------------------------------------------------------
 
-_ORDERCLOSE_OUT_SCHEMA = StructType(
-    [
-        StructField("l_orderkey", LongType()),
-        StructField("close_day", LongType()),
-        StructField("close_line", LongType()),
-    ]
-)
+_ORDERCLOSE_OUT_SCHEMA = "l_orderkey long, close_day long, close_line long"
 
-_ORDERCLOSE_STATE_SCHEMA = StructType(
-    [
-        StructField("best_day", LongType()),
-        StructField("best_line", LongType()),
-    ]
-)
+_ORDERCLOSE_STATE_SCHEMA = "best_day long, best_line long"
 
 
 def _order_close_per_order(key: tuple, pdfs, state: GroupState):
@@ -2110,23 +1833,16 @@ def streaming_order_close(
     Scale: state is one fixed-width (day, line) pair per live order —
     the bound the in-flight working set has anyway; one orderkey
     shuffle per micro-batch."""
-    from googlecloudstorage_blueprints_spark.streaming.events_stream import (
-        read_lineitem_stream,
+    li = read_table_stream(
+        spark, sf_dir, "lineitem", glob, max_files_per_trigger
     )
-
-    li = read_lineitem_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        li.select("l_orderkey", "l_linenumber", "l_shipdate")
-        .groupBy("l_orderkey")
-        .applyInPandasWithState(
-            _order_close_per_order,
-            _ORDERCLOSE_OUT_SCHEMA,
-            _ORDERCLOSE_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        li.select("l_orderkey", "l_linenumber", "l_shipdate"),
+        ["l_orderkey"],
+        _order_close_per_order,
+        _ORDERCLOSE_OUT_SCHEMA,
+        _ORDERCLOSE_STATE_SCHEMA,
+        event_time=None,
     )
 
 
@@ -2134,21 +1850,9 @@ def streaming_order_close(
 # streaming growth accounting: reclassifying week-class changelog (r12)
 # ---------------------------------------------------------------------------
 
-_GROWTH_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("epoch_week", LongType()),
-        StructField("cls", StringType()),
-        StructField("ver", LongType()),
-    ]
-)
+_GROWTH_OUT_SCHEMA = "user_id long, epoch_week long, cls string, ver long"
 
-_GROWTH_STATE_SCHEMA = StructType(
-    [
-        StructField("weeks", ArrayType(LongType())),
-        StructField("ver", LongType()),
-    ]
-)
+_GROWTH_STATE_SCHEMA = "weeks array<long>, ver long"
 
 
 def _classify_weeks(ws: list) -> dict:
@@ -2230,20 +1934,15 @@ def streaming_growth_accounting(
 
     Scale: state is one calendar-bounded week array + version per
     user; one user_id shuffle per micro-batch."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("user_id", "ts")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _growth_class_diff,
-            _GROWTH_OUT_SCHEMA,
-            _GROWTH_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events.select("user_id", "ts"),
+        ["user_id"],
+        _growth_class_diff,
+        _GROWTH_OUT_SCHEMA,
+        _GROWTH_STATE_SCHEMA,
     )
 
 
@@ -2251,22 +1950,12 @@ def streaming_growth_accounting(
 # streaming cohort retention: reclassifying (cohort, offset) changelog (r14)
 # ---------------------------------------------------------------------------
 
-_COHORT_OUT_SCHEMA = StructType(
-    [
-        StructField("o_custkey", LongType()),
-        StructField("month", LongType()),
-        StructField("cohort_month", LongType()),
-        StructField("month_offset", LongType()),
-        StructField("ver", LongType()),
-    ]
+_COHORT_OUT_SCHEMA = (
+    "o_custkey long, month long, cohort_month long, month_offset long, "
+    "ver long"
 )
 
-_COHORT_STATE_SCHEMA = StructType(
-    [
-        StructField("months", ArrayType(LongType())),
-        StructField("ver", LongType()),
-    ]
-)
+_COHORT_STATE_SCHEMA = "months array<long>, ver long"
 
 
 def _cohort_assign_diff(key: tuple, pdfs, state: GroupState):
@@ -2343,24 +2032,16 @@ def streaming_cohort_retention(
 
     Scale: state is one calendar-bounded month array + version per
     customer; one o_custkey shuffle per micro-batch."""
-    from googlecloudstorage_blueprints_spark.streaming.events_stream import (
-        read_orders_stream,
+    orders = read_table_stream(
+        spark, sf_dir, "orders", glob, max_files_per_trigger
     )
-
-    orders = read_orders_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        orders.select("o_custkey", "o_orderdate")
-        .withWatermark("o_orderdate", WATERMARK)
-        .groupBy("o_custkey")
-        .applyInPandasWithState(
-            _cohort_assign_diff,
-            _COHORT_OUT_SCHEMA,
-            _COHORT_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        orders.select("o_custkey", "o_orderdate"),
+        ["o_custkey"],
+        _cohort_assign_diff,
+        _COHORT_OUT_SCHEMA,
+        _COHORT_STATE_SCHEMA,
+        event_time="o_orderdate",
     )
 
 
@@ -2371,23 +2052,12 @@ def streaming_cohort_retention(
 SPACE_SAVING_CAPACITY = 64
 TOPK_WORD_SHARDS = 32
 
-_TOPK_WORDS_OUT_SCHEMA = StructType(
-    [
-        StructField("shard", LongType()),
-        StructField("word", StringType()),
-        StructField("est", LongType()),
-        StructField("err", LongType()),
-        StructField("ver", LongType()),
-    ]
+_TOPK_WORDS_OUT_SCHEMA = (
+    "shard long, word string, est long, err long, ver long"
 )
 
-_TOPK_WORDS_STATE_SCHEMA = StructType(
-    [
-        StructField("words", ArrayType(StringType())),
-        StructField("counts", ArrayType(LongType())),
-        StructField("errs", ArrayType(LongType())),
-        StructField("ver", LongType()),
-    ]
+_TOPK_WORDS_STATE_SCHEMA = (
+    "words array<string>, counts array<long>, errs array<long>, ver long"
 )
 
 
@@ -2471,12 +2141,8 @@ def streaming_topk_words(
 
     Scale: fixed C-counter state per shard — corpus-size-independent;
     one shard shuffle per micro-batch."""
-    from googlecloudstorage_blueprints_spark.streaming.events_stream import (
-        read_documents_stream,
-    )
-
-    docs = read_documents_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    docs = read_table_stream(
+        spark, sf_dir, "documents", glob, max_files_per_trigger
     )
     words = (
         docs.where(F.col("text").isNotNull())
@@ -2487,12 +2153,13 @@ def streaming_topk_words(
             "word",
         )
     )
-    return words.groupBy("shard").applyInPandasWithState(
+    return _keyed_state(
+        words,
+        ["shard"],
         _space_saving_counts,
         _TOPK_WORDS_OUT_SCHEMA,
         _TOPK_WORDS_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
+        event_time=None,
     )
 
 
@@ -2517,22 +2184,17 @@ _space_saving_counts.__doc__ = _space_saving_counts.__doc__.format(
 _FUNNEL_ATTR_FROM = "signup"
 _FUNNEL_ATTR_TO = "purchase"
 
-_FUNNEL_ATTR_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("signup_us", LongType()),
-        StructField("purchase_us", LongType()),  # NULL until one qualifies
-        StructField("ver", LongType()),
-    ]
+_FUNNEL_ATTR_OUT_SCHEMA = (
+    "user_id long, signup_us long, "
+    "purchase_us long, "        # NULL until one qualifies
+    "ver long"
 )
 
-_FUNNEL_ATTR_STATE_SCHEMA = StructType(
-    [
-        StructField("signup_us", LongType()),    # NULL until first signup
-        StructField("purchase_us", LongType()),  # min purchase >= signup
-        StructField("pre", ArrayType(LongType())),  # purchases < signup
-        StructField("ver", LongType()),
-    ]
+_FUNNEL_ATTR_STATE_SCHEMA = (
+    "signup_us long, "          # NULL until first signup
+    "purchase_us long, "        # min purchase >= signup
+    "pre array<long>, "         # purchases < signup
+    "ver long"
 )
 
 
@@ -2637,23 +2299,17 @@ def streaming_funnel_attribution(
     list (post-signup purchases are folded or discarded at arrival —
     never stored), so state rides funnel entry order, not event
     volume; one user_id shuffle per micro-batch."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
+    return _keyed_state(
         events.where(
             F.col("event_type").isin(_FUNNEL_ATTR_FROM, _FUNNEL_ATTR_TO)
-        )
-        .select("user_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _funnel_attribution_diff,
-            _FUNNEL_ATTR_OUT_SCHEMA,
-            _FUNNEL_ATTR_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+        ).select("user_id", "ts", "event_type"),
+        ["user_id"],
+        _funnel_attribution_diff,
+        _FUNNEL_ATTR_OUT_SCHEMA,
+        _FUNNEL_ATTR_STATE_SCHEMA,
     )
 
 
@@ -2666,21 +2322,11 @@ HLL_P = 10                 # 2^10 = 1024 registers ≈ 3.25% standard error
 HLL_M = 1 << HLL_P
 _HLL_ALPHA = 0.7213 / (1 + 1.079 / HLL_M)  # Flajolet et al. 2007
 
-_HLL_OUT_SCHEMA = StructType(
-    [
-        StructField("epoch_day", LongType()),
-        StructField("est_distinct", LongType()),
-        StructField("n_nonzero_registers", LongType()),
-        StructField("ver", LongType()),
-    ]
+_HLL_OUT_SCHEMA = (
+    "epoch_day long, est_distinct long, n_nonzero_registers long, ver long"
 )
 
-_HLL_STATE_SCHEMA = StructType(
-    [
-        StructField("registers", ArrayType(IntegerType())),
-        StructField("ver", LongType()),
-    ]
-)
+_HLL_STATE_SCHEMA = "registers array<int>, ver long"
 
 
 def _hll_hash64(value: int) -> int:
@@ -2781,23 +2427,16 @@ def streaming_daily_uniques_hll(
 
     Scale: fixed 4 KiB-order state per day regardless of traffic; one
     epoch-day shuffle per micro-batch."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
     day = F.expr("unix_micros(ts) div 86400000000").cast("long")
-    return (
-        events.select(
-            day.alias("epoch_day"), "user_id", F.col("ts")
-        )
-        .withWatermark("ts", WATERMARK)
-        .groupBy("epoch_day")
-        .applyInPandasWithState(
-            _hll_day_registers,
-            _HLL_OUT_SCHEMA,
-            _HLL_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events.select(day.alias("epoch_day"), "user_id", F.col("ts")),
+        ["epoch_day"],
+        _hll_day_registers,
+        _HLL_OUT_SCHEMA,
+        _HLL_STATE_SCHEMA,
     )
 
 
@@ -2810,21 +2449,9 @@ streaming_daily_uniques_hll.__doc__ = streaming_daily_uniques_hll.__doc__.format
 # Longest-streak changelog (streak-MERGING reclassifier)
 # ---------------------------------------------------------------------------
 
-_STREAK_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("max_streak", LongType()),
-        StructField("n_weeks", LongType()),
-        StructField("ver", LongType()),
-    ]
-)
+_STREAK_OUT_SCHEMA = "user_id long, max_streak long, n_weeks long, ver long"
 
-_STREAK_STATE_SCHEMA = StructType(
-    [
-        StructField("weeks", ArrayType(LongType())),
-        StructField("ver", LongType()),
-    ]
-)
+_STREAK_STATE_SCHEMA = "weeks array<long>, ver long"
 
 
 def _longest_week_run(ws: list) -> int:
@@ -2900,20 +2527,15 @@ def streaming_active_streaks(
     user; one user_id shuffle per micro-batch — same envelope as
     ``streaming_growth_accounting``, which shares the week-set state
     but classifies per-week rather than reducing to one scalar."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("user_id", "ts")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _streak_diff,
-            _STREAK_OUT_SCHEMA,
-            _STREAK_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events.select("user_id", "ts"),
+        ["user_id"],
+        _streak_diff,
+        _STREAK_OUT_SCHEMA,
+        _STREAK_STATE_SCHEMA,
     )
 
 
@@ -2923,25 +2545,12 @@ def streaming_active_streaks(
 
 _US_PER_HOUR = 3_600_000_000
 
-_HOURLY_PCTL_OUT_SCHEMA = StructType(
-    [
-        StructField("event_type", StringType()),
-        StructField("n_hours", LongType()),
-        StructField("max_load", LongType()),
-        StructField("p50_load", DoubleType()),
-        StructField("p90_load", DoubleType()),
-        StructField("p99_load", DoubleType()),
-        StructField("ver", LongType()),
-    ]
+_HOURLY_PCTL_OUT_SCHEMA = (
+    "event_type string, n_hours long, max_load long, p50_load double, "
+    "p90_load double, p99_load double, ver long"
 )
 
-_HOURLY_PCTL_STATE_SCHEMA = StructType(
-    [
-        StructField("hours", ArrayType(LongType())),
-        StructField("counts", ArrayType(LongType())),
-        StructField("ver", LongType()),
-    ]
-)
+_HOURLY_PCTL_STATE_SCHEMA = "hours array<long>, counts array<long>, ver long"
 
 
 def _interp_percentile(sorted_vals: list, q: float) -> float:
@@ -3033,20 +2642,15 @@ def streaming_hourly_load_percentiles(
     Scale: state is one cell per (type, active hour) — ~9k cells per
     type-year at any traffic volume; one event_type shuffle per
     micro-batch."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    events = read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    return (
-        events.select("event_type", "ts")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _hourly_load_pctl,
-            _HOURLY_PCTL_OUT_SCHEMA,
-            _HOURLY_PCTL_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events.select("event_type", "ts"),
+        ["event_type"],
+        _hourly_load_pctl,
+        _HOURLY_PCTL_OUT_SCHEMA,
+        _HOURLY_PCTL_STATE_SCHEMA,
     )
 
 
@@ -3062,25 +2666,12 @@ def streaming_hourly_load_percentiles(
 # task.
 TABLE_DIGEST_SHARDS = 32
 
-_TABLE_DIGEST_OUT_SCHEMA = StructType(
-    [
-        StructField("table_name", StringType()),
-        StructField("shard", IntegerType()),
-        StructField("n_rows", LongType()),
-        StructField("digest", LongType()),
-        StructField("digest_sum", LongType()),
-        StructField("ver", LongType()),
-    ]
+_TABLE_DIGEST_OUT_SCHEMA = (
+    "table_name string, shard int, n_rows long, digest long, digest_sum long, "
+    "ver long"
 )
 
-_TABLE_DIGEST_STATE_SCHEMA = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("x", LongType()),
-        StructField("s", LongType()),
-        StructField("ver", LongType()),
-    ]
-)
+_TABLE_DIGEST_STATE_SCHEMA = "n long, x long, s long, ver long"
 
 # Mirror of operators.audit.DIGEST_SUM_MOD — duplicated as a literal so
 # the Arrow worker never imports the operator registry; pinned equal by
@@ -3173,28 +2764,14 @@ def streaming_table_digest(
     from googlecloudstorage_blueprints_spark.operators.audit import (
         row_hash_expr,
     )
-    from googlecloudstorage_blueprints_spark.session import (
-        apply_runtime_conf,
-    )
 
     if table not in TABLE_DIGEST_SPEC:
         raise ValueError(
             f"unknown table {table!r} (catalog: {sorted(TABLE_DIGEST_SPEC)})"
         )
-    apply_runtime_conf(spark)
-    glob = glob if glob is not None else f"{table}.parquet"
-    static = spark.read.option("pathGlobFilter", glob).parquet(sf_dir)
-    reader = spark.readStream.schema(static.schema).option(
-        "pathGlobFilter", glob
+    stream = read_table_stream(
+        spark, sf_dir, table, glob, max_files_per_trigger
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(sf_dir)
-    for f_name, f_type in stream.dtypes:
-        if f_type == "timestamp_ntz":
-            stream = stream.withColumn(
-                f_name, F.col(f_name).cast("timestamp")
-            )
     _s, h = row_hash_expr(table)
     hashed = (
         stream.select(h.alias("h"))
@@ -3206,12 +2783,13 @@ def streaming_table_digest(
             "h",
         )
     )
-    return hashed.groupBy("table_name", "shard").applyInPandasWithState(
+    return _keyed_state(
+        hashed,
+        ["table_name", "shard"],
         _table_digest_partials,
         _TABLE_DIGEST_OUT_SCHEMA,
         _TABLE_DIGEST_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
+        event_time=None,
     )
 
 

@@ -29,7 +29,13 @@ from googlecloudstorage_blueprints_spark.operators import (
     all_oracles,
     all_queries,
 )
+from googlecloudstorage_blueprints_spark.operators.audit import digest_frame
 from googlecloudstorage_blueprints_spark.sources.catalog import TABLES
+from googlecloudstorage_blueprints_spark.streaming import (
+    merge_digest_rows,
+    run_stream_to_memory,
+    streaming_table_digest,
+)
 
 SRC_SF = "/root/testdata/sf0.001"
 
@@ -103,6 +109,26 @@ def test_nanos_vintage_matches_oracle(spark, nanos_dir, name):
     s = sorted(tuple(_canon(r[i]) for i in so) for r in srows)
     d = sorted(tuple(_canon(r[i]) for i in do) for r in drows)
     assert s == d, f"{name}: spark={s[:3]} duck={d[:3]}"
+
+
+@pytest.mark.parametrize("table", ["events", "orders", "lineitem"])
+def test_nanos_vintage_streaming_digest_matches_batch(
+    spark, nanos_dir, table
+):
+    """The digest twin (the ``validate --continuous`` feed) reads through
+    the catalog's timestamp rule like every other stream: on the NANOS
+    vintage its merged partials equal the batch ``digest_frame`` row
+    instead of failing analysis on ``unix_micros(<bigint>)``."""
+    rows = run_stream_to_memory(
+        streaming_table_digest(spark, nanos_dir, table=table),
+        f"nanos_digest_{table}",
+    ).collect()
+    batch = digest_frame(spark, nanos_dir, [table]).collect()[0]
+    assert merge_digest_rows(rows) == (
+        batch["n_rows"],
+        batch["digest"],
+        batch["digest_sum"],
+    ), table
 
 
 def test_nanos_vintage_really_stores_nanos(nanos_dir):
